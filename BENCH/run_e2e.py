@@ -10,7 +10,7 @@ What it proves, in one artifact:
     rule, BASELINE.md);
   - deleting the manifests of every stage after `concepts` (= a crash
     mid-run: later stages never published) and re-running the SAME
-    fingerprint resumes the completed prefix from parquet and
+    input resumes the completed prefix from parquet and
     recomputes only the tail — resumed stages keep their original
     manifest timestamps;
   - the fused curate() verdict over the sf0.1 documents table.
@@ -56,9 +56,8 @@ def main():
     write_warc(pages, warc_dir, records_per_file=500)
     report["warc_write_sec"] = round(time.time() - t0, 3)
 
-    fp = f"e2e-{N_PAGES}"
     t0 = time.time()
-    build_kg_from_warc(spark, warc_dir, run_dir, fingerprint=fp)
+    build_kg_from_warc(spark, warc_dir, run_dir)
     report["t_cold_sec"] = round(time.time() - t0, 3)
     stages = [r.asDict() for r in run_report(spark, run_dir).collect()]
     report["stages_cold"] = stages
@@ -83,7 +82,7 @@ def main():
         if os.path.isdir(outp):
             shutil.rmtree(outp)
     t0 = time.time()
-    build_kg_from_warc(spark, warc_dir, run_dir, fingerprint=fp)
+    build_kg_from_warc(spark, warc_dir, run_dir)
     report["t_resume_sec"] = round(time.time() - t0, 3)
     report["killed_stages"] = killed
     resumed_ok = all(

@@ -542,7 +542,8 @@ def main() -> None:
     try:
         os.makedirs(os.path.join(os.path.dirname(__file__), "BENCH"), exist_ok=True)
         with open(
-            os.path.join(os.path.dirname(__file__), "BENCH", "bench_latest.json"), "w"
+            os.path.join(os.path.dirname(__file__), "BENCH",
+                         f"bench_latest_sf{sf:g}.json"), "w"
         ) as f:
             f.write(line + "\n")
     except OSError:

@@ -5,26 +5,26 @@ ref /root/reference/knowledge_graph_builder.py:83-92) and otherwise recomputes
 the world on every upload (ref app.py:100-102). At 10^12-doc scale a mid-run
 failure must NOT restart the world, so every named stage writes:
 
-  <run_dir>/<stage>.parquet         — the stage output (atomic: tmp + rename)
+  <run_dir>/<stage>.parquet         — the stage output, written in place
   <run_dir>/_manifest/<stage>.json  — {stage, fingerprint, rows,
-                                       per-partition lineage counters, status}
+                                       per-file footer row counts, status}
 
-A stage re-runs only when its input fingerprint changed; otherwise the
-materialized parquet is read back (snapshot-isolation-lite — the same seam an
-Iceberg catalog would provide; parquet keeps the sandbox dependency-free while
-io_tables abstracts the format).
+A stage is read back only when its entry is complete and carries the same
+fingerprint; a missing, stale or unparsable entry re-runs it. The entry is
+dropped before the write and published after it, so a crash re-runs the stage.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
-import shutil
 import tempfile
+import time
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class Manifest:
@@ -37,11 +37,13 @@ class Manifest:
         return os.path.join(self.mdir, f"{stage}.json")
 
     def load(self, stage: str) -> dict | None:
-        p = self._path(stage)
-        if not os.path.exists(p):
+        """The stage's manifest entry; None when it is missing or cannot be
+        read or parsed (a torn write reads as "stage not complete")."""
+        try:
+            with open(self._path(stage), encoding="utf-8") as f:
+                return json.load(f)
+        except (OSError, ValueError):
             return None
-        with open(p, encoding="utf-8") as f:
-            return json.load(f)
 
     def is_complete(self, stage: str, fingerprint: str) -> bool:
         m = self.load(stage)
@@ -51,6 +53,10 @@ class Manifest:
             and m.get("fingerprint") == fingerprint
             and os.path.exists(m.get("output", ""))
         )
+
+    def discard(self, stage: str) -> None:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(self._path(stage))
 
     def mark_complete(self, stage: str, fingerprint: str, output: str,
                       rows: int, partition_counts: list[dict],
@@ -82,41 +88,31 @@ def run_stage(
 ) -> DataFrame:
     """Execute-or-resume one named stage.
 
-    Completed (same fingerprint) -> read back the materialized output.
-    Otherwise: build, write atomically, record per-partition lineage counters
-    (spark_partition_id row counts — the driver-side view of which partitions
-    produced what), then publish the manifest entry LAST so a crash between
-    write and publish re-runs the stage (idempotent overwrite).
+    Complete entry with the same fingerprint -> read back the materialized
+    output. Otherwise: drop the stage's manifest entry, build and write
+    straight to `<stage>.parquet`, take the row count of every written file
+    from its parquet footer, then publish the manifest entry LAST, so a
+    crash anywhere before the publish re-runs the stage (idempotent
+    overwrite).
     """
-    import time
-
     out_path = os.path.join(manifest.run_dir, f"{stage}.parquet")
     if manifest.is_complete(stage, fingerprint):
         return spark.read.parquet(out_path)
 
     t0 = time.time()
-    df = build()
-    tmp_path = out_path + ".tmp"
-    if os.path.exists(tmp_path):
-        shutil.rmtree(tmp_path, ignore_errors=True)
-    df.write.mode("overwrite").parquet(tmp_path)
-    if os.path.exists(out_path):
-        shutil.rmtree(out_path, ignore_errors=True)
-    os.replace(tmp_path, out_path)
-
-    written = spark.read.parquet(out_path)
-    pc = (
-        written.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count("*").alias("rows"))
-        .collect()
-    )
-    partition_counts = [{"pid": r["pid"], "rows": r["rows"]} for r in pc]
-    rows = sum(p["rows"] for p in partition_counts)
+    manifest.discard(stage)
+    build().write.mode("overwrite").parquet(out_path)
+    partition_counts = [
+        {"file": f, "rows": pq.read_metadata(os.path.join(out_path, f)).num_rows}
+        for f in sorted(os.listdir(out_path))
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    ]
     manifest.mark_complete(
-        stage, fingerprint, out_path, rows, partition_counts,
+        stage, fingerprint, out_path,
+        sum(p["rows"] for p in partition_counts), partition_counts,
         elapsed_sec=round(time.time() - t0, 3),
     )
-    return written
+    return spark.read.parquet(out_path)
 
 
 def run_report(spark: SparkSession, run_dir: str) -> DataFrame:

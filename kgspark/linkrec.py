@@ -130,7 +130,9 @@ def fs_em(
                             = (2·10⁶·num + den) div (2·den)
         (num, den ≤ 10⁶ᴷ⁺¹; with K=3 fields that is 10²⁴, and
         2·10⁶·num ≈ 10³⁰ — inside DECIMAL(38,0)/HUGEINT, outside
-        int64, hence the explicit widening.)
+        int64, hence the explicit widening. K=4 still fits, at 2·10³⁶;
+        K≥5 overflows from the initial parameters on, so it raises
+        ValueError.)
       M-step (driver, 1-row aggregate — the bounded-collect class):
         m_f ← (2·10⁶·Σp·γ_f + Σp) div (2·Σp)
         u_f ← (2·10⁶·Σ(10⁶−p)·γ_f + Σ(10⁶−p)) div (2·Σ(10⁶−p))
@@ -146,6 +148,11 @@ def fs_em(
     """
     from kgspark.session import materialize
 
+    if len(gamma_cols) > 4:
+        raise ValueError(
+            f"fs_em: at most 4 agreement fields fit DECIMAL(38,0), "
+            f"got {len(gamma_cols)}"
+        )
     spark = pairs.sparkSession
     g = materialize(pairs.select(*gamma_cols))
     m = {f: init_m for f in gamma_cols}

@@ -122,21 +122,24 @@ def build_kg(
     run_dir: str,
     k_topics: int | None = 8,
     similarity_threshold: float = 0.3,
-    fingerprint: str | None = None,
     with_topics: bool = True,
 ) -> dict[str, DataFrame]:
     """Run (or resume) the full pipeline; returns the stage DataFrames.
 
-    `fingerprint` identifies the input snapshot (defaults to a hash of the
-    run parameters + page count); stages with a matching complete manifest
-    entry are read back, not recomputed.
+    The stage fingerprint hashes the run parameters with the page count and
+    an order-independent digest of the pages' content; stages with a
+    matching complete manifest entry are read back, not recomputed.
     """
     manifest = Manifest(run_dir)
-    if fingerprint is None:
-        n_pages = pages.count()
-        fingerprint = hashlib.md5(
-            f"{n_pages}|{k_topics}|{similarity_threshold}".encode()
-        ).hexdigest()
+    n_pages, digest = pages.agg(
+        F.count(F.lit(1)),
+        # decimal: a bigint sum of xxhash64 overflows under ANSI mode
+        F.sum(F.xxhash64(*pages.columns).cast("decimal(38,0)")),
+    ).first()
+    fingerprint = hashlib.md5(
+        f"{n_pages}|{digest}|{k_topics}|{similarity_threshold}|{with_topics}"
+        .encode()
+    ).hexdigest()
     aliases = alias_table(spark)
 
     documents = run_stage(
@@ -292,7 +295,7 @@ def build_kg_from_warc(
     responses shaped to the pages schema) and :func:`build_kg` — exactly
     the ingestion path the north star describes, with the same
     checkpoint-manifest resume semantics. All build_kg kwargs pass
-    through (k_topics, similarity_threshold, fingerprint, with_topics).
+    through (k_topics, similarity_threshold, with_topics).
     """
     from kgspark.warc import warc_pages
 

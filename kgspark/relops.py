@@ -1823,14 +1823,12 @@ def ewma_smooth(
     trend_test/theil_sen_slope (did the metric drift? how fast? and
     what is its smoothed current level?):
 
-        s_1 = x_1;   s_t = floor((s_{t-1}·(2^k − 1) + x_t) / 2^k)
+        s_1 = x_1;   s_t = (s_{t-1}·(2^k − 1) + x_t) div 2^k
 
     Every step is integer arithmetic on the caller's pre-quantized
-    non-negative values (cents/ppm upstream — the quantize-upstream
-    pin; non-negativity makes floor and truncate coincide, so Spark's
-    floor(x/2^k) and DuckDB's `//` agree and the whole trajectory is
-    engine-exact). Intermediate products stay ≤ max(x)·2^k ≪ 2⁵³, so
-    the fp64 division inside floor() is exact.
+    values (cents/ppm upstream — the quantize-upstream pin). `div`
+    truncates toward zero like DuckDB's integer `//`, so the whole
+    trajectory is engine-exact for values of either sign.
 
     Bounded-window posture shared with theil_sen_slope: the fold runs
     over the group's first `max_rows` rows in `order_cols` order
@@ -1863,12 +1861,9 @@ def ewma_smooth(
             lambda s: s["__v"],
         ).alias("__vals"),
     )
-    fold = F.aggregate(
-        F.expr(f"slice(__vals, 2, {max_rows})"),
-        F.element_at(F.col("__vals"), 1),
-        lambda acc, x: F.floor(
-            (acc * F.lit(m) + x) / F.lit(1 << k)
-        ).cast("long"),
+    fold = F.expr(
+        f"aggregate(slice(__vals, 2, {max_rows}), element_at(__vals, 1),"
+        f" (acc, x) -> (acc * {m} + x) div {1 << k})"
     )
     return grouped.select(
         *group_cols, "n",

@@ -105,8 +105,8 @@ def cluster_chunks(
     Clusterer = BisectingKMeans if method == "bisecting" else KMeans
 
     vecs = chunks.withColumn("__features", array_to_vector(F.col(emb_col)))
-    n = vecs.count()
     if k is None:
+        n = vecs.count()
         k_hi = min(k_max, max(2, n - 1))
         k_lo = min(k_min, k_hi)
         best_k, best_s = k_lo, float("-inf")

@@ -464,3 +464,9 @@ def test_fs_em_exact_integer_trajectory(spark):
     r0 = fs_em(empty, ["g1", "g2", "g3"], rounds=2).collect()[0]
     assert r0["n_pairs"] == 0 and r0["pi_ppm"] == 500_000
     assert r0["m_g1"] == 900_000 and r0["u_g1"] == 100_000
+
+    # 2·10⁶·num fits DECIMAL(38,0) for up to 4 fields; 5 would overflow
+    df4 = df.selectExpr("*", "g1 AS g4", "g2 AS g5")
+    assert fs_em(df4, ["g1", "g2", "g3", "g4"], rounds=1).count() == 1
+    with pytest.raises(ValueError, match="at most 4"):
+        fs_em(df4, ["g1", "g2", "g3", "g4", "g5"])

@@ -42,8 +42,8 @@ def test_precision_recall_vs_golden(built):
 def test_resume_is_idempotent(spark, built):
     out, _, run_dir = built
     first = _spo(out["triples"])
-    # Re-run with the same run_dir + fingerprint inputs: stages read back from
-    # the manifest, and the triple set is unchanged.
+    # Re-run with the same run_dir and input: stages read back from the
+    # manifest, and the triple set is unchanged.
     pages = pages_df(spark, 80, seed=42)
     out2 = build_kg(spark, pages, run_dir, with_topics=False)
     assert _spo(out2["triples"]) == first
@@ -54,9 +54,23 @@ def test_partitioning_invariance(spark, tmp_path):
     pages = pages_df(spark, 40, seed=9).repartition(13)
     out = build_kg(spark, pages, str(tmp_path / "r13"), with_topics=False)
     pages1 = pages_df(spark, 40, seed=9).coalesce(1)
-    out1 = build_kg(spark, pages1, str(tmp_path / "r1"), with_topics=False,
-                    fingerprint="c1")
+    out1 = build_kg(spark, pages1, str(tmp_path / "r1"), with_topics=False)
     assert _spo(out["triples"]) == _spo(out1["triples"])
+
+
+def test_same_page_count_new_content_rebuilds(spark, tmp_path):
+    """Two inputs with the same page count but different pages, built into
+    one run_dir: the second build returns its own KG, not the first's."""
+    run_dir = str(tmp_path / "run")
+    build_kg(spark, pages_df(spark, 60, seed=1), run_dir, with_topics=False)
+    out = build_kg(spark, pages_df(spark, 60, seed=2), run_dir,
+                   with_topics=False)
+    rows, _ = generate_pages(60, seed=2)
+    docs = {r["filename"]: r["content"] for r in out["documents"].collect()}
+    assert docs == {r["url"]: r["text"] for r in rows}
+    fresh = build_kg(spark, pages_df(spark, 60, seed=2),
+                     str(tmp_path / "fresh"), with_topics=False)
+    assert _spo(out["triples"]) == _spo(fresh["triples"])
 
 
 def test_nodes_table_last_write_wins(built):

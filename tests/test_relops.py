@@ -811,20 +811,24 @@ def test_ewma_smooth_exact_fold(spark):
         ("a", 1, 100), ("a", 2, 200), ("a", 3, 40), ("a", 4, 400),
         ("b", 1, 7),
         ("c", 2, 10), ("c", 1, 90),  # out-of-order input, sorted by t
+        ("d", 1, -5), ("d", 2, -2), ("d", 3, 3),  # floor != truncate here
     ]
     df = spark.createDataFrame(rows, "g string, t int, v long")
     out = {r.g: (r.n, r.last_v, r.ewma_v)
            for r in ewma_smooth(df, ["g"], ["t"], "v", k=2).collect()}
 
     def replica(vals, k=2):
+        # truncating division, as Spark `div` and DuckDB `//` do
         s = vals[0]
         for x in vals[1:]:
-            s = (s * ((1 << k) - 1) + x) // (1 << k)
+            a = s * ((1 << k) - 1) + x
+            s = abs(a) // (1 << k) * (1 if a >= 0 else -1)
         return s
 
     assert out["a"] == (4, 400, replica([100, 200, 40, 400]))
     assert out["b"] == (1, 7, 7)           # single row: s = x_1
     assert out["c"] == (2, 10, replica([90, 10]))  # t-order, not input
+    assert out["d"] == (3, 3, replica([-5, -2, 3])) == (3, 3, -2)
     # max_rows bounds the fold
     long_rows = [("z", t, t) for t in range(1, 50)]
     dz = spark.createDataFrame(long_rows, "g string, t int, v long")

@@ -5,8 +5,10 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from kgspark.checkpoint import Manifest
 from kgspark.embed import embed_texts, hash_embed
 from kgspark.pipeline import build_kg
 from kgspark.synth import pages_df
@@ -34,7 +36,7 @@ def test_resume_after_simulated_crash(spark, tmp_path):
     final triples identical (BASELINE.md resumability target)."""
     run_dir = str(tmp_path / "run")
     pages = pages_df(spark, 40, seed=5)
-    out1 = build_kg(spark, pages, run_dir, with_topics=False, fingerprint="fp1")
+    out1 = build_kg(spark, pages, run_dir, with_topics=False)
     triples1 = _spo(out1["triples"])
 
     # crash simulation: stage 'triples_concepts' (+ downstream 'nodes') lost
@@ -42,7 +44,7 @@ def test_resume_after_simulated_crash(spark, tmp_path):
         os.remove(os.path.join(run_dir, "_manifest", f"{stage}.json"))
     before = _mtime_tree(os.path.join(run_dir, "documents.parquet"))
 
-    out2 = build_kg(spark, pages, run_dir, with_topics=False, fingerprint="fp1")
+    out2 = build_kg(spark, pages, run_dir, with_topics=False)
     assert _spo(out2["triples"]) == triples1
     # documents stage was NOT recomputed: files untouched
     assert _mtime_tree(os.path.join(run_dir, "documents.parquet")) == before
@@ -52,11 +54,63 @@ def test_resume_after_simulated_crash(spark, tmp_path):
     assert m["elapsed_sec"] > 0 and m["partitions"]
 
 
+def test_failed_publish_reruns_stage(spark, tmp_path, monkeypatch):
+    """Fault injection: input A completes, then a build of input B dies
+    after writing `triples_canonical` but before publishing its manifest.
+    Rebuilding A must re-run that stage, not read B's output back under
+    A's old manifest entry."""
+    run_dir = str(tmp_path / "run")
+    pages_a = pages_df(spark, 40, seed=5)
+    want = _spo(build_kg(spark, pages_a, run_dir, with_topics=False)["triples"])
+
+    publish = Manifest.mark_complete
+    calls = []
+
+    def publish_fails_once(self, stage, *args, **kwargs):
+        if stage == "triples_canonical" and not calls:
+            calls.append(stage)
+            raise RuntimeError("killed before publish")
+        return publish(self, stage, *args, **kwargs)
+
+    monkeypatch.setattr(Manifest, "mark_complete", publish_fails_once)
+    with pytest.raises(RuntimeError, match="killed before publish"):
+        build_kg(spark, pages_df(spark, 30, seed=6), run_dir, with_topics=False)
+    assert Manifest(run_dir).load("triples_canonical") is None
+
+    out = build_kg(spark, pages_a, run_dir, with_topics=False)
+    assert _spo(out["triples"]) == want
+    m = Manifest(run_dir)
+    assert (m.load("triples_canonical")["fingerprint"]
+            == m.load("documents")["fingerprint"])
+
+
+def test_truncated_manifest_reruns_stage(spark, tmp_path):
+    """A manifest entry that cannot be parsed counts as incomplete: the
+    stage re-runs instead of the build failing."""
+    run_dir = str(tmp_path / "run")
+    pages = pages_df(spark, 20, seed=5)
+    want = _spo(build_kg(spark, pages, run_dir, with_topics=False)["triples"])
+    path = os.path.join(run_dir, "_manifest", "concepts.json")
+    with open(path, encoding="utf-8") as f:
+        text = f.read()
+    with open(path, "w", encoding="utf-8") as f:
+        f.write(text[: len(text) // 2])
+
+    out = build_kg(spark, pages, run_dir, with_topics=False)
+    assert _spo(out["triples"]) == want
+    assert Manifest(run_dir).load("concepts")["status"] == "complete"
+
+
 def test_full_pipeline_with_topics(spark, tmp_path):
     """Topics path end-to-end: chunk -> embed -> KMeans -> tfidf top-k ->
-    naming -> doc->topic threshold join, unioned into triples."""
+    naming -> doc->topic threshold join, unioned into triples. The run_dir
+    first holds a build of the same pages without topics: turning topics
+    on must re-run the stages, so `nodes` gains the topic nodes."""
+    run_dir = str(tmp_path / "run")
+    build_kg(spark, pages_df(spark, 30, seed=8), run_dir, k_topics=4,
+             with_topics=False)
     out = build_kg(
-        spark, pages_df(spark, 30, seed=8), str(tmp_path / "run"),
+        spark, pages_df(spark, 30, seed=8), run_dir,
         k_topics=4, with_topics=True,
     )
     topics = out["topics"].collect()
