@@ -17,6 +17,8 @@ Algorithm, all as DataFrame ops (no GraphFrames dependency):
      propagation (converges in O(log(diameter)) joins; early-stops when no
      label changes)
   6. representative = lexicographically smallest surface per component
+     (the converged min label); `merge_map` keeps only the surfaces it
+     rewrites and short-circuits to None when step 4 verifies no pair
 
 At 100 TB the all-pairs alternative is O(n^2) and impossible; LSH blocking
 keeps candidate generation linear-ish in n with tunable recall via
@@ -191,16 +193,43 @@ def connected_components(
     )
 
 
+def merge_map(
+    entities: DataFrame, id_col: str = "name", **lsh_kwargs
+) -> DataFrame | None:
+    """(name, canonical) for every surface whose component representative
+    (min surface in the component) differs from it, materialized; None when
+    no candidate pair verifies, i.e. every surface is its own representative.
+
+    The verified pairs are materialized once, and connected components run
+    over the surfaces they touch only. Min-label propagation converges to
+    the component's min surface, so the label IS the representative."""
+    pairs = materialize(candidate_pairs(entities, id_col, **lsh_kwargs))
+    if pairs.isEmpty():
+        return None
+    touched = (
+        pairs.select(F.col("a").alias("name"))
+        .union(pairs.select(F.col("b").alias("name")))
+        .distinct()
+    )
+    comp = connected_components(touched, pairs)
+    return materialize(
+        comp.where(F.col("name") != F.col("component"))
+        .select("name", F.col("component").alias("canonical"))
+    )
+
+
 def canonical_map(
     entities: DataFrame, id_col: str = "name", **lsh_kwargs
 ) -> DataFrame:
     """(name, canonical): every entity mapped to its component representative
     (min surface in the component). Entities with no near-dups map to self."""
     nodes = entities.select(F.col(id_col).alias("name")).distinct()
-    pairs = candidate_pairs(nodes, "name", **lsh_kwargs)
-    comp = connected_components(nodes, pairs)
-    rep = comp.groupBy("component").agg(F.min("name").alias("canonical"))
-    return comp.join(rep, "component").select("name", "canonical")
+    merges = merge_map(nodes, "name", **lsh_kwargs)
+    if merges is None:
+        return nodes.select("name", F.col("name").alias("canonical"))
+    return nodes.join(merges, "name", "left").select(
+        "name", F.coalesce(F.col("canonical"), F.col("name")).alias("canonical")
+    )
 
 
 def ifp_sameas(

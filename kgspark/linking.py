@@ -4,21 +4,28 @@ The reference's entity surface forms are whatever the LLM / spaCy NER emits
 (ref /root/reference/knowledge_graph_builder.py:104-196); linking them to
 canonical entities is implicit (string identity). The north star upgrades this
 to explicit dictionary+alias linking: a small alias table
-(surface_lower -> canonical, score) is BROADCAST-joined against mention
-columns; when a surface maps to several candidates the highest score wins
-(deterministic tie-break on canonical name).
+(surface_lower -> canonical, score) resolved in plain Python to one
+candidate per surface (the highest score wins; deterministic tie-break on
+canonical name). Scalar mention columns BROADCAST-join against it
+(`link_column`); array mention columns resolve inside the JVM through a
+literal map (`link_array`), with no Python worker and no join.
 
 Scale note: the alias table is dimension-sized (« executors' memory) so the
-join never shuffles the fact side — `F.broadcast` pins the build side.
+join never shuffles the fact side — `F.broadcast` pins the build side — and
+it is a local relation (LocalTableScan), so broadcasting or collecting it
+runs no Spark job.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
+
+
+def _rank(canonical, score) -> tuple:
+    # score desc NULLS LAST, then canonical asc NULLS FIRST
+    return (score is None, -(score or 0.0), canonical is not None, canonical or "")
 
 
 def alias_table(spark: SparkSession, rows=None) -> DataFrame:
@@ -28,43 +35,33 @@ def alias_table(spark: SparkSession, rows=None) -> DataFrame:
         from kgspark.synth import alias_rows
 
         rows = alias_rows()
-    df = spark.createDataFrame(rows, "surface string, canonical string, score double")
-    w = Window.partitionBy("surface").orderBy(F.desc("score"), F.asc("canonical"))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
+    best: dict = {}
+    for surface, canonical, score in rows:
+        cur = best.get(surface)
+        if cur is None or _rank(canonical, score) < _rank(*cur):
+            best[surface] = (canonical, score)
+    return spark.createDataFrame(pa.table(
+        [list(best), [c for c, _ in best.values()], [s for _, s in best.values()]],
+        schema=pa.schema([("surface", pa.string()), ("canonical", pa.string()),
+                          ("score", pa.float64())]),
+    ))
+
+
+def link_array(col: str, aliases: DataFrame) -> Column:
+    """array<string> mention column -> its canonical entities, first
+    occurrence kept: `array_distinct(transform(col, v -> coalesce(
+    m[lower(v)], v)))` over a literal map of the resolved aliases. `m[k]`
+    is NULL for a missing key (unknown surfaces pass through) and for a NULL
+    element; a NULL array stays NULL. `aliases` is an `alias_table`: one row
+    per surface, as `create_map` needs unique keys."""
+    pairs = [(r["surface"], r["canonical"]) for r in aliases.collect()
+             if r["surface"] is not None]
+    m = F.create_map(*[F.lit(x) for kv in pairs for x in kv]).cast(
+        "map<string,string>"
     )
-
-
-def link_array_udf(spark: SparkSession, aliases: DataFrame):
-    """Vectorized alias resolution for array<string> mention columns.
-
-    The resolved alias dict is dimension-sized, so it ships to executors as a
-    Spark broadcast variable and linking happens map-side inside an Arrow UDF
-    — zero shuffles (the join-based path would shuffle the fact side twice
-    per array column: explode + re-group).
-    """
-    amap = {r["surface"]: r["canonical"] for r in aliases.collect()}
-    bc = spark.sparkContext.broadcast(amap)
-
-    @pandas_udf(ArrayType(StringType()))
-    def _udf(arrs: pd.Series) -> pd.Series:
-        m = bc.value
-
-        def link(arr):
-            if arr is None:
-                return None
-            seen: list[str] = []
-            for v in arr:
-                cv = m.get(v.lower(), v) if isinstance(v, str) else v
-                if cv not in seen:
-                    seen.append(cv)
-            return seen
-
-        return arrs.map(link)
-
-    return _udf
+    return F.array_distinct(
+        F.transform(F.col(col), lambda v: F.coalesce(m[F.lower(v)], v))
+    )
 
 
 def link_column(df: DataFrame, aliases: DataFrame, col: str) -> DataFrame:

@@ -2,13 +2,19 @@
 /root/reference/knowledge_graph_builder.py:458-584, as a staged Spark DAG).
 
     pages(url, warc_ts, html, text, lang)
-      -> documents   html->text extraction + lineage     (S7-S9, P1, P12)
-      -> concepts    rule-based extraction + linking     (E2, J6)
-      -> chunks      sentence chunking                   (E1)
-      -> chunk_embeddings / doc embeddings               (J4)
-      -> topics      clustering + tfidf + naming         (A1-A7, E4)
-      -> triples     concept edges + doc->topic edges    (E5, J1)
-      -> nodes       last-write-wins node table          (E6)
+      -> documents          html->text extraction + lineage   (S7-S9, P1, P12)
+      -> concepts           rule-based extraction + linking   (E2, J6)
+      -> triples_concepts   concept edges, alias-linked       (E5)
+      -> triples_canonical  near-dup surface merge (the input as it is
+                            when no surface pair verifies)
+      -> entities           canonical entity table
+      -> chunk_embeddings   sentence chunking + embedding     (E1, J4)
+      -> topics             clustering + tfidf + naming       (A1-A7, E4)
+      -> triples            concept edges + doc->topic edges  (E5, J1)
+      -> nodes              last-write-wins node table        (E6)
+
+The `chunks` output is chunk_embeddings without its `embedding` column; doc
+embeddings (mean of chunk embeddings) feed the doc->topic edges.
 
 Each stage materializes through the checkpoint manifest (kgspark.checkpoint)
 so a killed run resumes from the last complete stage.
@@ -21,12 +27,13 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kgspark.canon import merge_map
 from kgspark.chunk import chunk_documents
 from kgspark.checkpoint import Manifest, run_stage
 from kgspark.edges import concept_edges, doc_topic_edges
 from kgspark.embed import embed_udf
 from kgspark.html import extract_text_udf
-from kgspark.linking import alias_table, link_array_udf, link_column
+from kgspark.linking import alias_table, link_array, link_column
 from kgspark.openie import extract_concepts_udf
 from kgspark.topics import build_topics
 
@@ -52,7 +59,8 @@ def pages_to_documents(pages: DataFrame) -> DataFrame:
 
 def documents_to_concepts(docs: DataFrame, aliases: DataFrame) -> DataFrame:
     """Extract concept structs per document, explode, and canonicalize the
-    mention columns via the broadcast alias dictionary."""
+    mention columns via the alias dictionary: `name` by broadcast join, the
+    array columns through a literal map inside the JVM."""
     c = docs.select(
         "filename", "ts", "source", "confidence",
         F.explode(extract_concepts_udf(F.col("content"))).alias("c"),
@@ -67,11 +75,8 @@ def documents_to_concepts(docs: DataFrame, aliases: DataFrame) -> DataFrame:
         F.col("c.actions").alias("actions"),
     )
     c = link_column(c, aliases, "name")
-
-    # Array mention columns resolve map-side via a broadcast dict (no shuffle).
-    link_arr = link_array_udf(docs.sparkSession, aliases)
     for col in ("children", "related"):
-        c = c.withColumn(col, link_arr(F.col(col)))
+        c = c.withColumn(col, link_array(col, aliases))
     # Post-linking dedup + deterministic importance (surface variants of one
     # canonical entity collapse, so counts are computed here, not in openie).
     c = c.withColumn("parents", F.array_distinct("parents"))
@@ -166,23 +171,24 @@ def build_kg(
     # North-star canonicalization stage: MinHash-LSH blocking + connected
     # components over every entity surface the alias dictionary did NOT
     # resolve ("Acme Corp." / "acme corp" punctuation-case near-dups), then
-    # rewrite triples onto canonical representatives and re-dedup.
+    # rewrite triples onto canonical representatives and re-dedup. With no
+    # merge the rewrite and the re-dedup are the identity: triples_concepts
+    # is already last-write-wins per (subj, pred, obj).
     def build_canonical() -> DataFrame:
-        from kgspark.canon import canonical_map
-
-        surfaces = (
-            triples_concepts.select(F.col("subj").alias("name"))
-            .union(triples_concepts.select(F.col("obj").alias("name")))
-            .distinct()
+        surfaces = triples_concepts.select(F.col("subj").alias("name")).union(
+            triples_concepts.select(F.col("obj").alias("name"))
         )
-        cmap = canonical_map(surfaces).where(F.col("name") != F.col("canonical"))
+        merges = merge_map(surfaces)
+        if merges is None:
+            return triples_concepts
         # dimension-sized in practice (only near-dup survivors) -> broadcast
+        t = triples_concepts
         for col in ("subj", "obj"):
-            m = cmap.select(
+            m = merges.select(
                 F.col("name").alias(f"__n_{col}"),
                 F.col("canonical").alias(f"__c_{col}"),
             )
-            t = (triples_concepts if col == "subj" else t).join(
+            t = t.join(
                 F.broadcast(m), F.col(col) == F.col(f"__n_{col}"), "left"
             ).withColumn(
                 col, F.coalesce(F.col(f"__c_{col}"), F.col(col))
@@ -222,14 +228,15 @@ def build_kg(
     }
 
     if with_topics:
-        chunks = run_stage(
-            spark, manifest, "chunks", fingerprint,
-            lambda: chunk_documents(documents, text_col="content", max_length=500),
-        )
+        # chunk and embed in one stage; its files keep the documents'
+        # partitioning, which the KMeans input follows
         chunks_emb = run_stage(
             spark, manifest, "chunk_embeddings", fingerprint,
-            lambda: chunks.withColumn("embedding", embed_udf()(F.col("chunk_text"))),
+            lambda: chunk_documents(
+                documents, text_col="content", max_length=500
+            ).withColumn("embedding", embed_udf()(F.col("chunk_text"))),
         )
+        chunks = chunks_emb.drop("embedding")
         topics = run_stage(
             spark, manifest, "topics", fingerprint,
             lambda: build_topics(

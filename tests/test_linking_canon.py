@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from kgspark.canon import candidate_pairs, canonical_map, connected_components
-from kgspark.linking import alias_table, link_column
+from kgspark.linking import alias_table, link_array, link_column
 
 
 def test_link_column_resolves_aliases(spark):
@@ -23,6 +23,57 @@ def test_alias_best_candidate_scoring(spark):
     aliases = alias_table(spark, rows)
     df = spark.createDataFrame([("acme",)], "name string")
     assert link_column(df, aliases, "name").collect()[0]["name"] == "Acme Inc"
+
+
+def _link_loop(m, arr):
+    """Plain-Python array linking: first occurrence of each canonical kept."""
+    if arr is None:
+        return None
+    seen = []
+    for v in arr:
+        cv = m.get(v.lower(), v) if isinstance(v, str) else v
+        if cv not in seen:
+            seen.append(cv)
+    return seen
+
+
+def test_link_array_matches_python_loop(spark):
+    aliases = alias_table(spark, [
+        ("acme", "Acme Corp", 0.9), ("acme corp", "Acme Corp", 1.0),
+        ("usa", "United States", 0.9),
+    ])
+    m = {r["surface"]: r["canonical"] for r in aliases.collect()}
+    cases = [
+        None,                                    # null array
+        [],
+        ["USA", None, "usa"],                    # null element, mixed case
+        ["aCmE", "Globex", "ACME CORP", "acme"],  # two aliases of one canonical
+        ["Nowhere", "nowhere", "Nowhere"],       # unknown surfaces
+        [None, None],
+    ]
+    df = spark.createDataFrame([(i, c) for i, c in enumerate(cases)],
+                               "i int, arr array<string>")
+    got = {r["i"]: r["out"] for r in
+           df.select("i", link_array("arr", aliases).alias("out")).collect()}
+    for i, c in enumerate(cases):
+        assert got[i] == _link_loop(m, c), (c, got[i])
+    assert got[3] == ["Acme Corp", "Globex"]
+
+
+def test_link_array_empty_alias_table(spark):
+    empty = alias_table(spark, [])
+    df = spark.createDataFrame([(["A", "a", None],)], "arr array<string>")
+    assert df.select(link_array("arr", empty)).first()[0] == ["A", "a", None]
+
+
+def test_alias_table_tie_and_plan(spark):
+    rows = [("acme", "Acme Inc", 0.9), ("acme", "Acme Corp", 0.9),
+            ("acme", "ACME Ltd", 0.5), ("globex", "Globex", 1.0)]
+    aliases = alias_table(spark, rows)
+    got = {r["surface"]: (r["canonical"], r["score"]) for r in aliases.collect()}
+    # same score: the smallest canonical wins
+    assert got == {"acme": ("Acme Corp", 0.9), "globex": ("Globex", 1.0)}
+    assert "Exchange" not in aliases._jdf.queryExecution().executedPlan().toString()
 
 
 def test_candidate_pairs_finds_near_dups(spark):

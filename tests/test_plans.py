@@ -79,6 +79,24 @@ def test_alias_linking_broadcast(spark):
     assert "BroadcastHashJoin" in plan(q)
 
 
+def test_concepts_plan_single_python_eval(spark):
+    """Array mentions link inside the JVM: the only rows that cross into a
+    Python worker in documents_to_concepts are the openie UDF's."""
+    import datetime as dt
+
+    from kgspark.linking import alias_table
+    from kgspark.pipeline import documents_to_concepts
+
+    docs = spark.createDataFrame(
+        [("d1", dt.datetime(2024, 1, 1), "d1", 0.8, "Acme is a company.")],
+        "filename string, ts timestamp, source string, confidence double, "
+        "content string",
+    )
+    p = plan(documents_to_concepts(docs, alias_table(spark)))
+    evals = [ln for ln in p.splitlines() if "EvalPython" in ln]
+    assert len(evals) == 1 and "extract_concepts_udf" in evals[0], p[:3000]
+
+
 def test_salted_agg_two_phase(spark):
     from kgspark.skew import salted_agg
 

@@ -11,7 +11,11 @@ scipy) are stubbed at import, and identify_topics is pinned to "no topics"
 (its sklearn clustering path), isolating the concept/edge semantics the rule
 measures. Everything else — JSON scan, lineage fallbacks, nx.DiGraph edge
 semantics, weight arithmetic, reverse-relation map — is the reference's real
-code."""
+code.
+
+Without the reference checkout the P/R test still runs: it falls back to the
+synthetic corpus's golden triples (kgspark.synth.golden_triples), which name
+canonical entities, so our surfaces are alias-linked before comparing."""
 
 from __future__ import annotations
 
@@ -28,7 +32,7 @@ import networkx as nx
 
 from kgspark.embed import hash_embed
 from kgspark.openie import extract_concepts
-from kgspark.synth import generate_pages
+from kgspark.synth import generate_pages, golden_triples
 
 REF = "/root/reference/knowledge_graph_builder.py"
 
@@ -104,8 +108,10 @@ def _load_reference_builder():
 
 @pytest.fixture(scope="module")
 def reference_run(tmp_path_factory):
+    """(emitted, final) triple sets of the reference run; None when the
+    reference checkout is absent."""
     if not os.path.exists(REF):
-        pytest.skip("reference not present")
+        return None
     mod = _load_reference_builder()
     processed = tmp_path_factory.mktemp("processed")
     outdir = tmp_path_factory.mktemp("out")
@@ -168,8 +174,22 @@ def ours(spark):
     }
 
 
-def test_emitted_triples_pr(reference_run, ours):
-    emitted, _ = reference_run
+def _golden_fallback(spark, ours):
+    """(our alias-linked (subj, pred, obj), the synth golden triples)."""
+    from kgspark.linking import alias_table
+
+    m = {r["surface"]: r["canonical"] for r in alias_table(spark).collect()}
+    link = lambda s: m.get(s.lower(), s)  # noqa: E731
+    _, golden = generate_pages(40, seed=42)
+    return ({(link(s), p, link(o)) for s, p, o, _ in ours if p in CORE_PREDS},
+            golden_triples(golden))
+
+
+def test_emitted_triples_pr(spark, reference_run, ours):
+    if reference_run is None:
+        ours, emitted = _golden_fallback(spark, ours)
+    else:
+        emitted, _ = reference_run
     assert emitted, "reference emitted no triples — stub wiring broken"
     tp = len(ours & emitted)
     precision = tp / len(ours)
@@ -186,6 +206,8 @@ def test_final_graph_state_subset(reference_run, ours):
     """The reference's FINAL graph keeps one edge per (u, v) (nx.DiGraph
     overwrite — SURVEY.md §7.4.5); every surviving edge must exist in our
     triple set with identical predicate and weight."""
+    if reference_run is None:
+        pytest.skip("reference not present")
     _, final = reference_run
     missing = final - ours
     assert not missing, f"final-state edges missing from ours: {sorted(missing)[:5]}"
