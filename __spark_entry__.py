@@ -449,8 +449,8 @@ def _simhash_sql() -> str:
     return f"""
 sh_t AS (
   SELECT doc_id,
-         list_transform(list_distinct(list_filter(string_split_regex("text", '\s+'), t -> t <> '')), t -> md5(t)) AS md5s,
-         len(list_distinct(list_filter(string_split_regex("text", '\s+'), t -> t <> ''))) AS total
+         list_transform(list_distinct(list_filter(string_split_regex("text", '\\s+'), t -> t <> '')), t -> md5(t)) AS md5s,
+         len(list_distinct(list_filter(string_split_regex("text", '\\s+'), t -> t <> ''))) AS total
   FROM documents
 ),
 sh_h AS (SELECT doc_id, {expr} AS simhash FROM sh_t)
@@ -9922,11 +9922,11 @@ FROM hr_text"""
     def stop_hits(lang: str) -> str:
         words = ", ".join(f"'{w}'" for w in LANG_STOPWORDS[lang])
         return (
-            f"len(list_filter(string_split_regex(lower(\"text\"), '\s+'), t -> t IN ({words})))"
+            f"len(list_filter(string_split_regex(lower(\"text\"), '\\s+'), t -> t IN ({words})))"
         )
 
     lang_ratio = {
-        lg: f"({stop_hits(lg)} * 1.0 / greatest(len(list_filter(string_split_regex(lower(\"text\"), '\s+'), t -> t <> '')), 1))"
+        lg: f"({stop_hits(lg)} * 1.0 / greatest(len(list_filter(string_split_regex(lower(\"text\"), '\\s+'), t -> t <> '')), 1))"
         for lg in langs
     }
     best = "greatest(" + ", ".join(f"s_{lg}" for lg in langs) + ")"
@@ -10690,7 +10690,7 @@ SELECT doc_id, {pick} AS detected_lang, round({best}, 6) AS lang_score FROM s
         "text_quality": f"""
 WITH t AS (
   SELECT doc_id, "text",
-         len(list_filter(string_split_regex(lower("text"), '\s+'), x -> x <> '')) AS n_tok,
+         len(list_filter(string_split_regex(lower("text"), '\\s+'), x -> x <> '')) AS n_tok,
          length("text") AS n_chars,
          {stop_hits('en')} AS stop_hits
   FROM documents
@@ -10718,7 +10718,7 @@ FROM feats
 """,
         "text_tokens": """
 SELECT doc_id,
-       len(list_filter(string_split_regex(lower("text"), '\s+'), t -> t <> '')) AS n_tokens,
+       len(list_filter(string_split_regex(lower("text"), '\\s+'), t -> t <> '')) AS n_tokens,
        (ceil(length(regexp_replace("text", '[^a-zA-Z]', '', 'g')) / 4.2)
         + length(regexp_replace("text", '[^0-9]', '', 'g'))
         + length(regexp_replace("text", e'[a-zA-Z0-9 \\t\\n\\r]', '', 'g')))::BIGINT AS n_subwords
@@ -10880,7 +10880,7 @@ FROM documents
 """,
         "kg_embed_vectors": """
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(lower("text"), '\s+'), t -> t <> '') AS ts
+  SELECT doc_id, list_filter(string_split_regex(lower("text"), '\\s+'), t -> t <> '') AS ts
   FROM documents
 ),
 grams AS (

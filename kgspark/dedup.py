@@ -52,7 +52,7 @@ def word_shingles_from(toks_col, n: int = 3):
     """Distinct word n-grams of an ALREADY-MATERIALIZED token column.
     Shorter texts yield the whole token list as one shingle. Passing a raw
     split() expression instead makes Catalyst re-evaluate the full split for
-    every slice access — O(tokens^2) per row (see kgspark.topics.bigrams_of)."""
+    every slice access — O(tokens^2) per row (see kgspark.topics.ngrams_of)."""
     k = F.size(toks_col) - (n - 1)
     return F.array_distinct(
         F.when(

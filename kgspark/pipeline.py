@@ -94,19 +94,19 @@ def doc_embeddings(chunks_emb: DataFrame) -> DataFrame:
     CHUNK-level matrix by document index (ref :566 vs :253) — a latent bug.
     We use the true per-document mean embedding.
     """
-    ex = chunks_emb.select(
-        "filename", "ts", "source", "confidence",
-        F.posexplode("embedding").alias("pos", "v"),
+    keys = ("filename", "ts", "source", "confidence")
+    per_doc = chunks_emb.groupBy(*keys).agg(
+        F.array_sort(F.collect_list(F.struct("chunk_id", "embedding"))).alias("ce")
     )
-    return (
-        ex.groupBy("filename", "ts", "source", "confidence", "pos")
-        .agg(F.avg("v").alias("m"))
-        .groupBy("filename", "ts", "source", "confidence")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select(
-            "filename", "ts", "source", "confidence",
-            F.transform("pm", lambda s: s["m"].cast("float")).alias("embedding"),
-        )
+    # sum the vectors in chunk_id order: the mean does not follow the shuffle
+    total = F.aggregate(
+        "ce",
+        F.array_repeat(F.lit(0.0), F.size(F.col("ce")[0]["embedding"])),
+        lambda acc, c: F.zip_with(acc, c["embedding"], lambda a, b: a + b),
+    )
+    return per_doc.select(
+        *keys,
+        F.transform(total, lambda v: (v / F.size("ce")).cast("float")).alias("embedding"),
     )
 
 

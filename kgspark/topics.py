@@ -11,12 +11,16 @@ Spark design (documented deviations, SURVEY.md §7.3):
   - DBSCAN has no distributed twin; KMeans(seed=42) IS the clusterer (the
     reference's own fallback path is hierarchical/partitional clustering, and
     its DBSCAN path rarely survives the `< n_topics` check).
-  - TF-IDF is pure-DataFrame (explode tokens -> counts -> doc-freq join ->
-    idf), sklearn-style smooth idf: ln((1+n)/(1+df)) + 1. Vocab capped at
-    3000 by total tf; min_df=2; max_df=0.95 (ref :270-276). Unigrams+bigrams
-    (the reference's 1-4grams add cost, not correctness, at scale).
-  - Cluster mean includes zero rows: mean = sum(score)/cluster_size, exactly
-    what np.mean over the dense cluster submatrix computes (ref :291).
+  - TF-IDF is pure-DataFrame over one kernel of exact integer counts per
+    (key, term), key = doc (`tfidf_scores`) or cluster (`topic_terms`);
+    sklearn-style smooth idf ln((1+n)/(1+df)) + 1, once per term. Vocab
+    capped at 3000 by total tf (ties: term asc); min_df=2; max_df=0.95
+    (ref :270-276). Unigrams+bigrams (the reference's 1-4grams add cost,
+    not correctness, at scale).
+  - Cluster mean includes zero rows: score = Σtf · idf / cluster_size,
+    exactly the mean tf-idf np.mean computes over the dense cluster
+    submatrix (ref :291), and independent of partitioning. Terms rank by
+    score desc, then term asc.
   - Naming uses the reference's deterministic fallback formula as primary.
 """
 
@@ -150,11 +154,6 @@ def ngrams_of(toks_col, n: int):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def bigrams_of(toks_col):
-    """bigrams of a materialized token column (ngrams_of(toks, 2))."""
-    return ngrams_of(toks_col, 2)
-
-
 def all_ngrams_of(toks_col, ngram_range: tuple[int, int] = (1, 2)):
     """concat of n-grams for n in [lo, hi] — the reference's
     TfidfVectorizer(ngram_range=(1, 4)) term space (ref :270-276)."""
@@ -163,13 +162,34 @@ def all_ngrams_of(toks_col, ngram_range: tuple[int, int] = (1, 2)):
     return parts[0] if len(parts) == 1 else F.concat(*parts)
 
 
-def tokenize(col, with_bigrams: bool = True, ngram_range: tuple[int, int] | None = None):
-    """Single-expression variant. Prefer projecting `unigrams()` to a column
-    and applying `all_ngrams_of` to it (see tfidf_scores) in hot paths."""
-    toks = unigrams(col)
-    if ngram_range is None:
-        ngram_range = (1, 2) if with_bigrams else (1, 1)
-    return all_ngrams_of(toks, ngram_range)
+def _tokens(df: DataFrame, text_col: str, *keep: str) -> DataFrame:
+    # materialized: projection collapse substitutes the unigrams() subtree
+    # into every slice access of the ngram lambdas otherwise (O(tokens^2)/row)
+    return materialize(df.select(*keep, unigrams(F.col(text_col)).alias("__toks")))
+
+
+def _term_counts(toks: DataFrame, key: str, doc_col: str, n_docs: int,
+                 ngram_range: tuple[int, int], max_features: int = 3000,
+                 min_df: int = 2, max_df: float = 0.95) -> DataFrame:
+    """The term-count kernel: (key, term, tf, idf) over the vocabulary, with
+    integer tf per (key, term). Each doc sits under one key, so the per-key
+    df sum to the corpus df; only integers are summed, whatever the
+    partitioning."""
+    keys = list(dict.fromkeys((key, doc_col)))
+    counts = materialize(  # read by the vocabulary and by the result
+        toks.select(*keys, F.explode(all_ngrams_of(F.col("__toks"), ngram_range)).alias("term"))
+        .groupBy(key, "term")
+        .agg(F.count("*").alias("tf"), F.countDistinct(doc_col).alias("df"))
+    )
+    vocab = (
+        counts.groupBy("term").agg(F.sum("df").alias("df"), F.sum("tf").alias("total_tf"))
+        .where((F.col("df") >= min_df) & (F.col("df") <= int(max_df * n_docs)))
+        .orderBy(F.desc("total_tf"), F.asc("term"))
+        .limit(max_features)
+        .select("term", (F.log(F.lit(1.0 + n_docs) / (F.lit(1.0) + F.col("df")))
+                         + F.lit(1.0)).alias("idf"))
+    )
+    return counts.join(F.broadcast(vocab), "term").select(key, "term", "tf", "idf")
 
 
 def tfidf_scores(
@@ -185,63 +205,36 @@ def tfidf_scores(
     (rankings are what downstream uses; norm cancels inside a cluster mean
     ordering only approximately, deviation documented). ngram_range=(1, 4)
     reproduces the reference's vectorizer term space exactly."""
-    n_docs = chunks.select(doc_col).distinct().count()
-    # materialized: projection collapse substitutes the unigrams() subtree
-    # into every slice access of the ngram lambdas otherwise (the
-    # O(tokens^2)-per-row re-evaluation trap)
-    toks = materialize(chunks.select(
-        doc_col, unigrams(F.col(text_col)).alias("__toks")
-    ))
-    terms = (
-        toks.select(
-            doc_col,
-            F.explode(all_ngrams_of(F.col("__toks"), ngram_range)).alias("term"),
-        )
-        .groupBy(doc_col, "term").agg(F.count("*").alias("tf"))
-    )
-    # referenced by both the doc-frequency branch and the score join —
-    # materialize once instead of recomputing the explode+groupBy per branch
-    terms = materialize(terms)
-    df_counts = terms.groupBy("term").agg(
-        F.countDistinct(doc_col).alias("df"), F.sum("tf").alias("total_tf")
-    )
-    vocab = (
-        df_counts.where(
-            (F.col("df") >= min_df) & (F.col("df") <= int(max_df * n_docs))
-        )
-        .orderBy(F.desc("total_tf"), F.asc("term"))
-        .limit(max_features)
-    )
-    idf = F.log((F.lit(1.0 + n_docs)) / (F.lit(1.0) + F.col("df"))) + F.lit(1.0)
-    return (
-        terms.join(F.broadcast(vocab.select("term", "df")), "term")
-        .select(doc_col, "term", (F.col("tf") * idf).alias("tfidf"))
-    )
+    toks = _tokens(chunks, text_col, doc_col)
+    n_docs = toks.select(doc_col).distinct().count()
+    return _term_counts(
+        toks, doc_col, doc_col, n_docs, ngram_range, max_features, min_df, max_df
+    ).select(doc_col, "term", (F.col("tf") * F.col("idf")).alias("tfidf"))
 
 
 def topic_terms(
-    scored: DataFrame, clusters: DataFrame, doc_col: str = "chunk_uid",
+    clustered: DataFrame,
+    text_col: str = "chunk_text",
+    doc_col: str = "chunk_uid",
     top_k: int = 20,
+    ngram_range: tuple[int, int] = (1, 2),
 ) -> DataFrame:
-    """topics(cluster, terms array<string>): per-cluster mean tfidf
-    (zeros included: sum/cluster_size) -> top_k terms (score desc, term asc)."""
-    sizes = clusters.groupBy("cluster").agg(F.count("*").alias("n"))
-    cluster_scores = (
-        scored.join(clusters.select(doc_col, "cluster"), doc_col)
-        .groupBy("cluster", "term").agg(F.sum("tfidf").alias("s"))
-        .join(F.broadcast(sizes), "cluster")
-        .withColumn("score", F.col("s") / F.col("n"))
-    )
-    w = Window.partitionBy("cluster").orderBy(F.desc("score"), F.asc("term"))
-    return (
-        cluster_scores.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= top_k)
-        .groupBy("cluster")
-        .agg(F.collect_list(F.struct("rn", "term")).alias("rt"))
-        .select(
-            "cluster",
-            F.transform(F.array_sort("rt"), lambda s: s["term"]).alias("terms"),
-        )
+    """clustered chunks (doc, text, cluster) -> topics(cluster, terms
+    array<string>): the top_k terms of each cluster by mean tf-idf, zeros
+    included, i.e. tf * idf / cluster_size with tf summed over the cluster
+    (score desc, term asc)."""
+    toks = _tokens(clustered, text_col, "cluster", doc_col)
+    sizes = {r["cluster"]: r["count"] for r in toks.groupBy("cluster").count().collect()}
+    if not sizes:  # an empty literal map cannot be indexed by cluster
+        return toks.select("cluster", F.array().cast("array<string>").alias("terms"))
+    n = F.create_map(*[F.lit(x) for kv in sizes.items() for x in kv])[F.col("cluster")]
+    counts = _term_counts(toks, "cluster", doc_col, sum(sizes.values()), ngram_range)
+    # ascending (-score, term) is score desc, term asc
+    ranked = counts.groupBy("cluster").agg(F.array_sort(F.collect_list(F.struct(
+        (-(F.col("tf") * F.col("idf") / n)).alias("neg_score"), "term"
+    ))).alias("st"))
+    return ranked.select(
+        "cluster", F.transform(F.slice("st", 1, top_k), lambda s: s["term"]).alias("terms")
     )
 
 
@@ -267,14 +260,9 @@ def build_topics(
     from kgspark.embed import embed_udf
 
     clustered, _ = cluster_chunks(chunks, k=k, seed=seed)
-    clustered = clustered.persist()
-    scored = tfidf_scores(clustered, text_col=text_col, ngram_range=ngram_range)
-    named = name_topics(topic_terms(scored, clustered))
-    out = named.select(
+    named = name_topics(topic_terms(clustered, text_col=text_col, ngram_range=ngram_range))
+    return named.select(
         F.col("cluster").cast("long").alias("topic_id"),
         "topic_name", "terms",
         embed_udf()(F.col("topic_name")).alias("embedding"),
     )
-    out = materialize(out)
-    clustered.unpersist()
-    return out

@@ -149,6 +149,34 @@ def test_embed_cache_anti_join(spark):
     )
 
 
+def test_doc_embeddings_is_numpy_mean(spark):
+    """doc_embeddings = per-doc mean of the chunk vectors (numpy), for docs
+    with 1, 2 and 5 chunks, whatever order the chunk rows arrive in."""
+    import datetime as dt
+
+    import numpy as np
+
+    from kgspark.pipeline import doc_embeddings
+
+    rng = np.random.default_rng(7)
+    ts = dt.datetime(2024, 3, 1)
+    vecs = {(doc, cid): rng.standard_normal(8).astype(np.float32)
+            for doc, n in (("one", 1), ("two", 2), ("five", 5)) for cid in range(n)}
+    rows = [(doc, ts, "src", 0.8, cid, [float(x) for x in v])
+            for (doc, cid), v in reversed(vecs.items())]
+    chunks = spark.createDataFrame(
+        rows, "filename string, ts timestamp, source string, confidence double, "
+              "chunk_id int, embedding array<float>",
+    ).repartition(3)
+    got = {r["filename"]: np.array(r["embedding"], dtype=np.float32)
+           for r in doc_embeddings(chunks).collect()}
+    assert set(got) == {"one", "two", "five"}
+    for doc, v in got.items():
+        stack = np.array([e for (d, _), e in sorted(vecs.items()) if d == doc],
+                         dtype=np.float64)
+        np.testing.assert_array_equal(v, stack.mean(axis=0).astype(np.float32))
+
+
 def test_hash_embed_deterministic():
     a = hash_embed("hello world", 64)
     assert a == hash_embed("hello world", 64)
