@@ -4,7 +4,8 @@ North-star stage: near-duplicate entity surfaces ("Acme Corp" / "Acme Corp.",
 case/punctuation variants the alias dictionary doesn't know) are clustered and
 rewritten to one canonical representative.
 
-Algorithm, all as DataFrame ops (no GraphFrames dependency):
+Algorithm, DataFrame ops up to the verified pairs (no GraphFrames
+dependency):
   1. character-3-gram shingles of the normalized surface
   2. MinHash signature: for each of `num_hashes` salted md5 hash families,
      min over shingles (md5 so the same signature is computable in plain SQL
@@ -13,12 +14,11 @@ Algorithm, all as DataFrame ops (no GraphFrames dependency):
      two entities sharing a band key become a candidate pair (self-join on
      band key — the ONLY join, and it is blocked, never all-pairs)
   4. verify candidates with exact shingle Jaccard >= threshold
-  5. connected components over verified pairs by iterative min-id label
-     propagation (converges in O(log(diameter)) joins; early-stops when no
-     label changes)
+  5. `merge_map` collects the verified pairs (they touch only near-dup
+     survivors) and resolves components on the driver by union-find
   6. representative = lexicographically smallest surface per component
-     (the converged min label); `merge_map` keeps only the surfaces it
-     rewrites and short-circuits to None when step 4 verifies no pair
+     (the union-find root); `merge_map` returns only the surfaces it
+     rewrites, or None when step 4 verifies no pair
 
 At 100 TB the all-pairs alternative is O(n^2) and impossible; LSH blocking
 keeps candidate generation linear-ish in n with tunable recall via
@@ -27,6 +27,7 @@ keeps candidate generation linear-ish in n with tunable recall via
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -196,26 +197,32 @@ def connected_components(
 def merge_map(
     entities: DataFrame, id_col: str = "name", **lsh_kwargs
 ) -> DataFrame | None:
-    """(name, canonical) for every surface whose component representative
-    (min surface in the component) differs from it, materialized; None when
-    no candidate pair verifies, i.e. every surface is its own representative.
+    """(name, canonical) local relation for every surface whose component
+    representative (min surface in the component) differs from it; None
+    when no candidate pair verifies.
 
-    The verified pairs are materialized once, and connected components run
-    over the surfaces they touch only. Min-label propagation converges to
-    the component's min surface, so the label IS the representative."""
-    pairs = materialize(candidate_pairs(entities, id_col, **lsh_kwargs))
-    if pairs.isEmpty():
+    The verified pairs are collected and a union-find that keeps the
+    smaller root resolves the components on the driver. Python's code-point
+    string order is Spark's UTF-8 byte order, so each root is the min label
+    `connected_components` would converge to."""
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        while parent.get(x, x) != x:
+            parent[x] = x = parent.get(parent[x], parent[x])  # path halving
+        return x
+
+    for a, b in candidate_pairs(entities, id_col, **lsh_kwargs).collect():
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    if not parent:
         return None
-    touched = (
-        pairs.select(F.col("a").alias("name"))
-        .union(pairs.select(F.col("b").alias("name")))
-        .distinct()
-    )
-    comp = connected_components(touched, pairs)
-    return materialize(
-        comp.where(F.col("name") != F.col("component"))
-        .select("name", F.col("component").alias("canonical"))
-    )
+    names = list(parent)
+    return entities.sparkSession.createDataFrame(pa.table(
+        [names, [find(n) for n in names]],
+        schema=pa.schema([("name", pa.string()), ("canonical", pa.string())]),
+    ))
 
 
 def canonical_map(
@@ -325,13 +332,11 @@ def sameas_rewrite(
         nodes, sameas.select(F.col(a_col).alias("a"), F.col(b_col).alias("b")),
         max_iter=max_iter,
     )
-    rep = comp.groupBy("component").agg(F.min("name").alias("canonical"))
-    smap = (
-        comp.join(rep, "component")
-        .where(F.col("name") != F.col("canonical"))
-        .select("name", "canonical")
+    # the converged min label is the component's min member
+    smap = materialize(
+        comp.where(F.col("name") != F.col("component"))
+        .select("name", F.col("component").alias("canonical"))
     )
-    smap = materialize(smap)
     t = triples.select(
         F.col(subj_col).alias("subj"), F.col(pred_col).alias("pred"),
         F.col(obj_col).alias("obj"),

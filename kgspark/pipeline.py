@@ -4,9 +4,8 @@
     pages(url, warc_ts, html, text, lang)
       -> documents          html->text extraction + lineage   (S7-S9, P1, P12)
       -> concepts           rule-based extraction + linking   (E2, J6)
-      -> triples_concepts   concept edges, alias-linked       (E5)
-      -> triples_canonical  near-dup surface merge (the input as it is
-                            when no surface pair verifies)
+      -> triples_concepts   concept edges, near-dup surfaces  (E5)
+                            merged onto canonical representatives
       -> entities           canonical entity table
       -> chunk_embeddings   sentence chunking + embedding     (E1, J4)
       -> topics             clustering + tfidf + naming       (A1-A7, E4)
@@ -38,6 +37,9 @@ from kgspark.openie import extract_concepts_udf
 from kgspark.topics import build_topics
 
 DEFAULT_CONFIDENCE = 0.8  # ref knowledge_graph_builder.py:476
+# mixed into the stage fingerprint: bump it when a stage's output changes
+# for the same inputs, so an old run_dir's stages re-run, not read back
+PIPELINE_VERSION = 2
 
 
 def pages_to_documents(pages: DataFrame) -> DataFrame:
@@ -75,11 +77,11 @@ def documents_to_concepts(docs: DataFrame, aliases: DataFrame) -> DataFrame:
         F.col("c.actions").alias("actions"),
     )
     c = link_column(c, aliases, "name")
-    for col in ("children", "related"):
+    for col in ("parents", "children", "related"):
         c = c.withColumn(col, link_array(col, aliases))
-    # Post-linking dedup + deterministic importance (surface variants of one
-    # canonical entity collapse, so counts are computed here, not in openie).
-    c = c.withColumn("parents", F.array_distinct("parents"))
+    # Deterministic importance over the linked, deduped arrays (surface
+    # variants of one canonical entity count once, so it is computed here,
+    # not in openie).
     n_rel = F.size("parents") + F.size("children") + F.size("related")
     c = c.withColumn(
         "importance", F.round(F.lit(0.5) + 0.1 * F.least(n_rel, F.lit(5)), 1)
@@ -131,9 +133,10 @@ def build_kg(
 ) -> dict[str, DataFrame]:
     """Run (or resume) the full pipeline; returns the stage DataFrames.
 
-    The stage fingerprint hashes the run parameters with the page count and
-    an order-independent digest of the pages' content; stages with a
-    matching complete manifest entry are read back, not recomputed.
+    The stage fingerprint hashes PIPELINE_VERSION and the run parameters
+    with the page count and an order-independent digest of the pages'
+    content; stages with a matching complete manifest entry are read back,
+    not recomputed.
     """
     manifest = Manifest(run_dir)
     n_pages, digest = pages.agg(
@@ -142,8 +145,8 @@ def build_kg(
         F.sum(F.xxhash64(*pages.columns).cast("decimal(38,0)")),
     ).first()
     fingerprint = hashlib.md5(
-        f"{n_pages}|{digest}|{k_topics}|{similarity_threshold}|{with_topics}"
-        .encode()
+        f"{PIPELINE_VERSION}|{n_pages}|{digest}|{k_topics}|"
+        f"{similarity_threshold}|{with_topics}".encode()
     ).hexdigest()
     aliases = alias_table(spark)
 
@@ -156,54 +159,40 @@ def build_kg(
         lambda: documents_to_concepts(documents, aliases),
     )
 
+    # Concept edges with near-dup surfaces merged: MinHash-LSH blocking +
+    # components over every surface the alias dictionary did NOT resolve
+    # ("Acme Corp." / "acme corp" punctuation-case near-dups), a rewrite
+    # onto canonical representatives, then last-write-wins. Mention columns
+    # are already alias-linked concept-side.
     def build_triples_concepts() -> DataFrame:
         t = concept_edges(concepts)
-        # subj/obj surfaces were already canonicalized concept-side, but
-        # targets reached via properties of OTHER docs may still be aliases.
-        t = link_column(t, aliases, "subj")
-        t = link_column(t, aliases, "obj")
+        merges = merge_map(
+            t.select(F.col("subj").alias("name"))
+            .union(t.select(F.col("obj").alias("name")))
+        )
+        if merges is not None:
+            # dimension-sized (only near-dup survivors) -> broadcast
+            for col in ("subj", "obj"):
+                m = merges.select(
+                    F.col("name").alias(f"__n_{col}"),
+                    F.col("canonical").alias(f"__c_{col}"),
+                )
+                t = t.join(
+                    F.broadcast(m), F.col(col) == F.col(f"__n_{col}"), "left"
+                ).withColumn(
+                    col, F.coalesce(F.col(f"__c_{col}"), F.col(col))
+                ).drop(f"__n_{col}", f"__c_{col}")
         return last_write_wins(t, ["subj", "pred", "obj"])
 
     triples_concepts = run_stage(
         spark, manifest, "triples_concepts", fingerprint, build_triples_concepts
     )
 
-    # North-star canonicalization stage: MinHash-LSH blocking + connected
-    # components over every entity surface the alias dictionary did NOT
-    # resolve ("Acme Corp." / "acme corp" punctuation-case near-dups), then
-    # rewrite triples onto canonical representatives and re-dedup. With no
-    # merge the rewrite and the re-dedup are the identity: triples_concepts
-    # is already last-write-wins per (subj, pred, obj).
-    def build_canonical() -> DataFrame:
-        surfaces = triples_concepts.select(F.col("subj").alias("name")).union(
-            triples_concepts.select(F.col("obj").alias("name"))
-        )
-        merges = merge_map(surfaces)
-        if merges is None:
-            return triples_concepts
-        # dimension-sized in practice (only near-dup survivors) -> broadcast
-        t = triples_concepts
-        for col in ("subj", "obj"):
-            m = merges.select(
-                F.col("name").alias(f"__n_{col}"),
-                F.col("canonical").alias(f"__c_{col}"),
-            )
-            t = t.join(
-                F.broadcast(m), F.col(col) == F.col(f"__n_{col}"), "left"
-            ).withColumn(
-                col, F.coalesce(F.col(f"__c_{col}"), F.col(col))
-            ).drop(f"__n_{col}", f"__c_{col}")
-        return last_write_wins(t, ["subj", "pred", "obj"])
-
-    triples_canonical = run_stage(
-        spark, manifest, "triples_canonical", fingerprint, build_canonical
-    )
-
     # Entity table (north-star output): one row per canonical entity with
     # provenance + degree.
     def build_entities() -> DataFrame:
-        subj = triples_canonical.select(F.col("subj").alias("entity"))
-        obj = triples_canonical.select(F.col("obj").alias("entity"))
+        subj = triples_concepts.select(F.col("subj").alias("entity"))
+        obj = triples_concepts.select(F.col("obj").alias("entity"))
         degree = (
             subj.union(obj)
             .groupBy("entity")
@@ -223,7 +212,7 @@ def build_kg(
     out: dict[str, DataFrame] = {
         "documents": documents,
         "concepts": concepts,
-        "triples_concepts": triples_canonical,
+        "triples_concepts": triples_concepts,
         "entities": entities,
     }
 
@@ -250,11 +239,11 @@ def build_kg(
         dt_edges = doc_topic_edges(docs_emb, topics, threshold=similarity_threshold)
         triples = run_stage(
             spark, manifest, "triples", fingerprint,
-            lambda: triples_canonical.unionByName(dt_edges),
+            lambda: triples_concepts.unionByName(dt_edges),
         )
         out.update({"chunks": chunks, "topics": topics, "triples": triples})
     else:
-        out["triples"] = triples_canonical
+        out["triples"] = triples_concepts
 
     # Node table: topic nodes (ref :489-498) + concept nodes (ref :511-525),
     # last-write-wins per node_id.

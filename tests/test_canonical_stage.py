@@ -1,6 +1,7 @@
-"""Pipeline canonicalization stage: near-dup entity surfaces the alias
-dictionary does NOT know must merge via MinHash-LSH + connected components,
-and the entities output table must reflect canonical entities only."""
+"""Pipeline canonicalization inside the concept-triples stage: near-dup
+entity surfaces the alias dictionary does NOT know must merge via
+MinHash-LSH + components, and the entities output table must reflect
+canonical entities only."""
 
 from __future__ import annotations
 
@@ -64,22 +65,21 @@ def test_entities_table_shape(spark, tmp_path):
     assert e.where(F.col("degree") <= 0).count() == 0
 
 
-def test_canonical_stage_matches_full_map_rewrite(spark, tmp_path):
-    """The stage equals the full-map algorithm: canonical_map over every
-    surface, keep name != canonical, broadcast-rewrite subj and obj, then
-    last-write-wins per (subj, pred, obj)."""
-    from kgspark.canon import canonical_map
+def _parent_triples(concepts, cmap=None):
+    """The two-stage algorithm the stage replaces: concept edges, alias
+    re-link of subj/obj, last-write-wins; then (with a merge map) broadcast-
+    rewrite subj and obj and last-write-wins again."""
+    from kgspark.edges import concept_edges
+    from kgspark.linking import alias_table, link_column
     from kgspark.pipeline import last_write_wins
 
-    run = tmp_path / "run"
-    out = build_kg(spark, _near_dup_pages(spark), str(run), with_topics=False)
-    tc = spark.read.parquet(str(run / "triples_concepts.parquet"))
-    surfaces = tc.select(F.col("subj").alias("name")).union(
-        tc.select(F.col("obj").alias("name"))
-    ).distinct()
-    cmap = canonical_map(surfaces).where(F.col("name") != F.col("canonical"))
-    assert cmap.count() > 0  # the merge path really ran
-    t = tc
+    key = ["subj", "pred", "obj"]
+    t = concept_edges(concepts)
+    for col in ("subj", "obj"):
+        t = link_column(t, alias_table(concepts.sparkSession), col)
+    t = last_write_wins(t, key)
+    if cmap is None:
+        return t
     for col in ("subj", "obj"):
         m = cmap.select(F.col("name").alias("__n"), F.col("canonical").alias("__c"))
         t = (
@@ -87,24 +87,66 @@ def test_canonical_stage_matches_full_map_rewrite(spark, tmp_path):
             .withColumn(col, F.coalesce(F.col("__c"), F.col(col)))
             .drop("__n", "__c")
         )
-    want = last_write_wins(t, ["subj", "pred", "obj"]).select(*tc.columns)
+    return last_write_wins(t, key)
+
+
+def test_canonical_stage_matches_full_map_rewrite(spark, tmp_path):
+    """The one concept-triples stage equals the two-stage algorithm with a
+    merge map from Spark connected components over the verified pairs."""
+    from kgspark.canon import candidate_pairs, connected_components
+
+    out = build_kg(spark, _near_dup_pages(spark), str(tmp_path / "run"),
+                   with_topics=False)
+    tc = _parent_triples(out["concepts"])
+    surfaces = tc.select(F.col("subj").alias("name")).union(
+        tc.select(F.col("obj").alias("name"))
+    ).distinct()
+    pairs = candidate_pairs(surfaces)
+    touched = pairs.select(F.col("a").alias("name")).union(
+        pairs.select(F.col("b").alias("name"))
+    ).distinct()
+    cmap = (
+        connected_components(touched, pairs)
+        .where(F.col("name") != F.col("component"))
+        .select("name", F.col("component").alias("canonical"))
+    )
+    assert cmap.count() > 0  # the merge path really ran
     got = out["triples_concepts"]
-    assert got.columns == tc.columns
+    want = _parent_triples(out["concepts"], cmap).select(*got.columns)
     assert _rows(got) == _rows(want)
+
+
+def test_near_dup_merge_runs_no_spark_components(spark, tmp_path, monkeypatch):
+    """Near-dup components resolve on the driver: the build merges the
+    planted variants without the Spark connected-components loop."""
+    import kgspark.canon as canon
+
+    def _no_cc(*_a, **_k):
+        raise AssertionError("connected_components ran in build_kg")
+
+    monkeypatch.setattr(canon, "connected_components", _no_cc)
+    out = build_kg(spark, _near_dup_pages(spark), str(tmp_path / "run"),
+                   with_topics=False)
+    subs = {r["subj"] for r in out["triples_concepts"].collect()}
+    assert {s for s in subs if s.startswith("Initech")} == {"Initech Systems"}
 
 
 def test_no_verified_pair_skips_components(spark, tmp_path, monkeypatch):
     """With no near-dup pair, connected components never runs and the
-    canonical triples are the concept triples, row for row."""
+    concept triples are last-write-wins over the concept edges, row for
+    row."""
     import kgspark.canon as canon
+    from kgspark.edges import concept_edges
+    from kgspark.pipeline import last_write_wins
     from kgspark.synth import pages_df
 
     def _no_cc(*_a, **_k):
         raise AssertionError("connected_components ran without a verified pair")
 
     monkeypatch.setattr(canon, "connected_components", _no_cc)
-    run = tmp_path / "run"
-    out = build_kg(spark, pages_df(spark, 30, seed=5), str(run), with_topics=False)
-    tc = spark.read.parquet(str(run / "triples_concepts.parquet"))
-    assert tc.count() > 0
-    assert _rows(out["triples_concepts"]) == _rows(tc)
+    out = build_kg(spark, pages_df(spark, 30, seed=5), str(tmp_path / "run"),
+                   with_topics=False)
+    got = out["triples_concepts"]
+    want = last_write_wins(concept_edges(out["concepts"]), ["subj", "pred", "obj"])
+    assert got.count() > 0
+    assert _rows(got) == _rows(want.select(*got.columns))

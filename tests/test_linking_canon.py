@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kgspark.canon import candidate_pairs, canonical_map, connected_components
@@ -140,3 +141,62 @@ def test_connected_components_raises_without_convergence(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(nodes, edges, max_iter=1)
+
+
+def _chain64_pairs():
+    import random
+
+    names = [f"n{i:03d}" for i in range(64)]
+    pairs = [(names[i], names[i + 1]) if i % 3 else (names[i + 1], names[i])
+             for i in range(63)]
+    random.Random(7).shuffle(pairs)
+    return pairs
+
+
+# several components: a star, a cycle whose min sits opposite the first
+# edge, a duplicated pair, a two-node component joined through its max
+_COMPONENT_PAIRS = [
+    ("hub", "s1"), ("hub", "s2"), ("s3", "hub"), ("a0", "s9"),
+    ("c3", "c4"), ("c4", "c5"), ("c5", "c1"), ("c1", "c2"), ("c2", "c3"),
+    ("p", "q"), ("q", "p"), ("p", "q"),
+    ("y", "z"), ("x", "z"),
+]
+
+# non-ASCII surfaces: U+FF71 sorts below U+1D538 by code point (and UTF-8
+# bytes) but above it in UTF-16 code units
+_NON_ASCII_PAIRS = [
+    ("Zürich", "zürich"), ("zürich", "Zurich"),
+    ("東京都", "東京"),
+    ("𝔸bc", "ｱbc"), ("ｱbc", "Ærø"),
+    ("Émile", "émile"), ("Ǆemal", "Džemal"),
+]
+
+
+@pytest.mark.parametrize(
+    "pairs", [_chain64_pairs(), _COMPONENT_PAIRS, _NON_ASCII_PAIRS],
+    ids=["chain64", "components", "non_ascii"],
+)
+def test_merge_map_union_find_matches_connected_components(spark, monkeypatch, pairs):
+    """merge_map's driver union-find gives the map that Spark's min-label
+    connected components gives over the same verified pairs."""
+    import kgspark.canon as canon
+
+    edges = spark.createDataFrame(pairs, "a string, b string")
+    nodes = edges.select(F.col("a").alias("name")).union(
+        edges.select(F.col("b").alias("name"))
+    ).distinct()
+    want = {r["name"]: r["component"]
+            for r in connected_components(nodes, edges).collect()
+            if r["name"] != r["component"]}
+    monkeypatch.setattr(canon, "candidate_pairs", lambda *_a, **_k: edges)
+    got = {r["name"]: r["canonical"] for r in canon.merge_map(nodes).collect()}
+    assert got == want
+
+
+def test_merge_map_none_without_verified_pair(spark, monkeypatch):
+    import kgspark.canon as canon
+
+    empty = spark.createDataFrame([], "a string, b string")
+    monkeypatch.setattr(canon, "candidate_pairs", lambda *_a, **_k: empty)
+    ents = spark.createDataFrame([("Acme",), ("Globex",)], "name string")
+    assert canon.merge_map(ents) is None

@@ -56,7 +56,7 @@ def test_resume_after_simulated_crash(spark, tmp_path):
 
 def test_failed_publish_reruns_stage(spark, tmp_path, monkeypatch):
     """Fault injection: input A completes, then a build of input B dies
-    after writing `triples_canonical` but before publishing its manifest.
+    after writing `triples_concepts` but before publishing its manifest.
     Rebuilding A must re-run that stage, not read B's output back under
     A's old manifest entry."""
     run_dir = str(tmp_path / "run")
@@ -67,7 +67,7 @@ def test_failed_publish_reruns_stage(spark, tmp_path, monkeypatch):
     calls = []
 
     def publish_fails_once(self, stage, *args, **kwargs):
-        if stage == "triples_canonical" and not calls:
+        if stage == "triples_concepts" and not calls:
             calls.append(stage)
             raise RuntimeError("killed before publish")
         return publish(self, stage, *args, **kwargs)
@@ -75,12 +75,12 @@ def test_failed_publish_reruns_stage(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(Manifest, "mark_complete", publish_fails_once)
     with pytest.raises(RuntimeError, match="killed before publish"):
         build_kg(spark, pages_df(spark, 30, seed=6), run_dir, with_topics=False)
-    assert Manifest(run_dir).load("triples_canonical") is None
+    assert Manifest(run_dir).load("triples_concepts") is None
 
     out = build_kg(spark, pages_a, run_dir, with_topics=False)
     assert _spo(out["triples"]) == want
     m = Manifest(run_dir)
-    assert (m.load("triples_canonical")["fingerprint"]
+    assert (m.load("triples_concepts")["fingerprint"]
             == m.load("documents")["fingerprint"])
 
 
@@ -99,6 +99,26 @@ def test_truncated_manifest_reruns_stage(spark, tmp_path):
     out = build_kg(spark, pages, run_dir, with_topics=False)
     assert _spo(out["triples"]) == want
     assert Manifest(run_dir).load("concepts")["status"] == "complete"
+
+
+def test_pipeline_version_reruns_every_stage(spark, tmp_path, monkeypatch):
+    """A run_dir written by another PIPELINE_VERSION is stale: every stage
+    re-runs and republishes under the new fingerprint."""
+    import kgspark.pipeline as pipeline
+
+    run_dir = str(tmp_path / "run")
+    pages = pages_df(spark, 20, seed=5)
+    want = _spo(build_kg(spark, pages, run_dir, with_topics=False)["triples"])
+    stages = sorted(f[:-5] for f in os.listdir(os.path.join(run_dir, "_manifest")))
+    m = Manifest(run_dir)
+    old = {s: m.load(s)["fingerprint"] for s in stages}
+
+    monkeypatch.setattr(pipeline, "PIPELINE_VERSION", pipeline.PIPELINE_VERSION + 1)
+    out = build_kg(spark, pages, run_dir, with_topics=False)
+    assert _spo(out["triples"]) == want
+    new = {s: m.load(s)["fingerprint"] for s in stages}
+    assert len(set(new.values())) == 1
+    assert all(new[s] != old[s] for s in stages), (old, new)
 
 
 def test_full_pipeline_with_topics(spark, tmp_path):
