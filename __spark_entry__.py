@@ -16117,10 +16117,14 @@ pr_t AS (
          string_agg(v || ':' || cnt, '|' ORDER BY rk) AS top_values
   FROM pr_r WHERE rk <= 5 GROUP BY 1
 )
-SELECT s.col_name, s.n, coalesce(nl.n_null, 0)::BIGINT AS n_null,
-       s.ndv, s.min_v, s.max_v,
+SELECT c.col_name, coalesce(s.n, 0)::BIGINT AS n,
+       coalesce(nl.n_null, 0)::BIGINT AS n_null,
+       coalesce(s.ndv, 0)::BIGINT AS ndv,
+       coalesce(s.min_v, '') AS min_v, coalesce(s.max_v, '') AS max_v,
        coalesce(t.top_values, '') AS top_values
-FROM pr_s s LEFT JOIN pr_n nl USING (col_name)
+FROM (SELECT DISTINCT col_name FROM pr_v) c
+LEFT JOIN pr_s s USING (col_name)
+LEFT JOIN pr_n nl USING (col_name)
 LEFT JOIN pr_t t USING (col_name)
 """,
         # kgspark.relops.ewma_smooth: exact integer EWMA fold

@@ -2,7 +2,8 @@
 """Benchmark runner — prints ONE JSON line.
 
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {...per-query sec...}, "sf": <sf>,
+   "queries": {...per-query sec...},
+   "query_compiles": {...per-query Janino compiles...}, "sf": <sf>,
    "throughput_docs_per_sec": <extraction throughput>, "cpus": N}
 
 Env:
@@ -87,6 +88,11 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def _compiles() -> int:
+        # one compilation-time update per Janino compile in this JVM
+        return codegen.METRIC_COMPILATION_TIME().getCount()
 
     # warmup: JIT/codegen + parquet footer caches
     _materialize(qs["rel_pricing_summary"](spark, sf_dir))
@@ -100,15 +106,19 @@ def main() -> None:
             rdd.unpersist()
 
     times: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     # every registered query, in the registry's declaration order
     for name in qs:
-        t0 = time.time()
+        c0, t0 = _compiles(), time.time()
         _materialize(qs[name](spark, sf_dir))
         times[name] = round(time.time() - t0, 3)
+        compiles[name] = _compiles() - c0
         _drop_blocks()
 
+    c0 = _compiles()
     tp_sec, n_docs = throughput_leg(spark, sf_dir, repl)
     times["throughput_leg"] = round(tp_sec, 3)
+    compiles["throughput_leg"] = _compiles() - c0
 
     # end-to-end pipeline (synth pages -> extract -> link -> canonicalize ->
     # entities/nodes, all through checkpoint-manifest writes)
@@ -118,10 +128,11 @@ def main() -> None:
     from kgspark.synth import pages_df
 
     pages = pages_df(spark, 1000, seed=42)
-    t0 = time.time()
+    c0, t0 = _compiles(), time.time()
     out = build_kg(spark, pages, tempfile.mkdtemp(), with_topics=False)
     n_triples = out["triples"].count()
     times["pipeline_e2e_1k_pages"] = round(time.time() - t0, 3)
+    compiles["pipeline_e2e_1k_pages"] = _compiles() - c0
 
     total = round(sum(times.values()), 3)
     line = json.dumps(
@@ -130,6 +141,7 @@ def main() -> None:
             "value": total,
             "unit": "sec",
             "queries": times,
+            "query_compiles": compiles,
             "sf": sf,
             "cpus": cpus,
             "throughput_docs_per_sec": round(n_docs / tp_sec, 1),

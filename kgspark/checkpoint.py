@@ -9,9 +9,12 @@ failure must NOT restart the world, so every named stage writes:
   <run_dir>/_manifest/<stage>.json  — {stage, fingerprint, rows,
                                        per-file footer row counts, status}
 
-A stage is read back only when its entry is complete and carries the same
-fingerprint; a missing, stale or unparsable entry re-runs it. The entry is
-dropped before the write and published after it, so a crash re-runs the stage.
+A stage is read back only when its entry is complete, carries the same
+fingerprint and every file it lists still exists; a missing, stale or
+unparsable entry, or a lost part file, re-runs it. The entry is dropped before
+the write and published after it, so a crash re-runs the stage. The read-back
+takes its schema from the Spark schema Spark writes into every part file's
+footer, so it runs no schema-inference job.
 """
 
 from __future__ import annotations
@@ -25,6 +28,10 @@ from collections.abc import Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# footer key under which Spark's parquet writer stores the row schema as JSON
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class Manifest:
@@ -46,12 +53,15 @@ class Manifest:
             return None
 
     def is_complete(self, stage: str, fingerprint: str) -> bool:
-        m = self.load(stage)
+        """Complete, same fingerprint, and every file the entry lists exists
+        (a lost part file would otherwise read back as a partial stage)."""
+        m = self.load(stage) or {}
+        files = [p["file"] for p in m.get("partitions") or []]
         return bool(
-            m
-            and m.get("status") == "complete"
+            m.get("status") == "complete"
             and m.get("fingerprint") == fingerprint
-            and os.path.exists(m.get("output", ""))
+            and files
+            and all(os.path.exists(os.path.join(m["output"], f)) for f in files)
         )
 
     def discard(self, stage: str) -> None:
@@ -93,26 +103,39 @@ def run_stage(
     straight to `<stage>.parquet`, take the row count of every written file
     from its parquet footer, then publish the manifest entry LAST, so a
     crash anywhere before the publish re-runs the stage (idempotent
-    overwrite).
+    overwrite). Either way the read-back uses the Spark schema in the first
+    file's footer (Spark writes one file even for an empty DataFrame).
     """
     out_path = os.path.join(manifest.run_dir, f"{stage}.parquet")
     if manifest.is_complete(stage, fingerprint):
-        return spark.read.parquet(out_path)
+        first = manifest.load(stage)["partitions"][0]["file"]
+        return _read_back(
+            spark, out_path, pq.read_metadata(os.path.join(out_path, first))
+        )
 
     t0 = time.time()
     manifest.discard(stage)
     build().write.mode("overwrite").parquet(out_path)
-    partition_counts = [
-        {"file": f, "rows": pq.read_metadata(os.path.join(out_path, f)).num_rows}
+    footers = [
+        (f, pq.read_metadata(os.path.join(out_path, f)))
         for f in sorted(os.listdir(out_path))
         if f.endswith(".parquet") and not f.startswith(("_", "."))
     ]
+    partition_counts = [{"file": f, "rows": m.num_rows} for f, m in footers]
     manifest.mark_complete(
         stage, fingerprint, out_path,
         sum(p["rows"] for p in partition_counts), partition_counts,
         elapsed_sec=round(time.time() - t0, 3),
     )
-    return spark.read.parquet(out_path)
+    return _read_back(spark, out_path, footers[0][1])
+
+
+def _read_back(spark: SparkSession, path: str,
+               footer: pq.FileMetaData) -> DataFrame:
+    """Read a stage's output with the schema from one of its file footers:
+    no parquet schema-inference job."""
+    schema = StructType.fromJson(json.loads(footer.metadata[SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(path)
 
 
 def run_report(spark: SparkSession, run_dir: str) -> DataFrame:

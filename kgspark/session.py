@@ -5,6 +5,13 @@ Scale posture (100 TB / 1000-executor design, tested on local[N]):
   - Arrow on: every Python crossing is a vectorized pandas UDF batch.
   - shuffle partitions sized by env so local runs don't create 200 tiny tasks
     while cluster runs can raise it to 2-4x the core count.
+  - generated-code cache sized to hold whole builds: `build_kg` needs about
+    200 generated classes with topics (187-194 Janino compiles on a cold
+    250-page WARC build) and about 90 without (500 pages). Spark's default
+    cache of 100 entries evicts a topics build's classes before it ends, so
+    in a long-lived session every warm build would recompile them all (186
+    compiles per warm 250-page build); with room for 2000 a warm build
+    compiles 2.
 """
 
 from __future__ import annotations
@@ -42,6 +49,9 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # Room for ~10 builds' generated classes (208 per warm topics build);
+        # the default 100 evicts a build's own classes before it ends.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # Keep broadcast threshold generous: alias tables / topic tables are small.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Deterministic session timezone for timestamp round-trips.

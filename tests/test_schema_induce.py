@@ -225,3 +225,30 @@ def test_expect_checks(spark):
         {"name": "uq", "col": "id", "kind": "unique"},
     ])
     assert all(r.pass_flag == 1 for r in clean.collect())
+
+
+def test_profile_columns_matches_oracle_on_all_null_column(spark):
+    """The schema_profile oracle SQL gives the same rows as
+    profile_columns when a profiled column is entirely NULL (the
+    sentinel row: n=0, ndv=0, '' min/max/top)."""
+    import duckdb
+
+    import __spark_entry__ as E
+    from kgspark.schema_induce import profile_columns
+
+    rows = [("BUILDING", None, "Customer#1"), ("AUTO", None, "Customer#2"),
+            ("AUTO", None, None)]
+    schema = "c_mktsegment string, c_nationkey int, c_name string"
+    got = sorted(
+        tuple(r) for r in profile_columns(
+            spark.createDataFrame(rows, schema),
+            ["c_mktsegment", "c_nationkey", "c_name"], top_k=5,
+        ).collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE customer(c_mktsegment VARCHAR, "
+                "c_nationkey INTEGER, c_name VARCHAR)")
+    con.executemany("INSERT INTO customer VALUES (?, ?, ?)", rows)
+    want = sorted(con.execute(E.oracle_sql()["schema_profile"]).fetchall())
+    assert got == want
+    assert ("c_nationkey", 0, 3, 0, "", "", "") in got
